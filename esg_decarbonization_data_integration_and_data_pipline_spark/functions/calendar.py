@@ -51,12 +51,6 @@ def month_start(year_col: Column, month_col: Column) -> Column:
     return F.make_date(year_col, month_col, F.lit(1))
 
 
-def fiscal_prev_month(period: Column) -> Column:
-    """Previous month with the reference's January-wraps rule made
-    explicit; plain add_months handles the wrap natively."""
-    return F.add_months(period, -1)
-
-
 def last_12_months(run_date: dt.date) -> list[dt.date]:
     """The reference's 12-partition recompute loop keys
     (jobs/staging_to_app.py:1081-1085) -- used only to bound a

@@ -76,6 +76,7 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned im
     _read_dvs,
     _read_rowmeta,
     _read_stats,
+    _readable,
     _rows_lines,
     _stats_lines,
     _txns,
@@ -92,7 +93,7 @@ def _resolve_source(spark, src_dir: str, n, backend):
             f"{src_dir} has no committed version to clone")
     if n is None:
         n = cur
-    if not os.path.isdir(os.path.join(src_dir, f"v_{n:08d}")):
+    if not _readable(src_dir, n):
         raise ValueError(
             f"v_{n} of {src_dir} is not readable (never committed "
             f"or vacuumed)")

@@ -116,7 +116,7 @@ def set_table_constraints(spark, table_dir: str, checks: list[Check],
     return time -- quiesce writers when adding constraints to a hot
     table."""
     from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
-        committed_versions, current_version, read_current,
+        _readable, committed_versions, current_version, read_current,
         read_version, table_schema,
     )
 
@@ -177,8 +177,7 @@ def set_table_constraints(spark, table_dir: str, checks: list[Check],
             raced = [n for n in committed_versions(table_dir,
                                                    backend=backend)
                      if (seen is None or n > seen) and n <= now
-                     and os.path.isdir(os.path.join(table_dir,
-                                                    f"v_{n:08d}"))]
+                     and _readable(table_dir, n)]
             for v in raced:
                 enforce(read_version(spark, table_dir, v,
                                      backend=backend), checks)
@@ -225,7 +224,7 @@ def audit_constraints(spark, table_dir: str,
     there: not_null honestly reports every row as violating;
     null-skipping kinds pass vacuously."""
     from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
-        committed_versions, table_rowcount, table_schema,
+        _readable, committed_versions, table_rowcount, table_schema,
     )
     from esg_decarbonization_data_integration_and_data_pipline_spark.operators.expectations import (
         check_table_versions,
@@ -237,8 +236,7 @@ def audit_constraints(spark, table_dir: str,
     if versions is None:
         versions = [n for n in committed_versions(table_dir,
                                                   backend=backend)
-                    if os.path.isdir(os.path.join(table_dir,
-                                                  f"v_{n:08d}"))]
+                    if _readable(table_dir, n)]
     # r15: versions sharing the same applicable check set batch
     # through check_table_versions, so their scan halves run as ONE
     # unioned Spark job instead of one job per version (a 100-

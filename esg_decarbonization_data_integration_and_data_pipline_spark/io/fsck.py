@@ -42,6 +42,7 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned im
     _read_dvs,
     _read_rowmeta,
     _read_stats,
+    _readable,
     _rows_lines,
     _stats_lines,
     committed_versions,
@@ -116,12 +117,10 @@ def verify_table(spark: SparkSession, table_dir: str,
     every file's rows by scan."""
     backend = backend or _DEFAULT_BACKEND
     if n is not None:
-        versions = [n]
+        versions = walked = [n]
     else:
-        versions = [v for v in committed_versions(table_dir,
-                                                  backend=backend)
-                    if os.path.isdir(os.path.join(table_dir,
-                                                  f"v_{v:08d}"))]
+        walked = committed_versions(table_dir, backend=backend)
+        versions = [v for v in walked if _readable(table_dir, v)]
     root = os.path.abspath(table_dir)
     per_version_files = {v: _data_files(table_dir, v)
                          for v in versions}
@@ -264,8 +263,9 @@ def verify_table(spark: SparkSession, table_dir: str,
                 or vr["deep_rowcount_mismatch"] or vr["dv_errors"]):
             report["ok"] = False
         report["versions"][v] = vr
-    # unreferenced data files inside readable version dirs: vacuum
-    # fodder (informational -- e.g. superseded pre-purge tmp files).
+    # unreferenced data files inside version dirs, vacuum's retired
+    # data holders included: vacuum fodder (informational -- e.g.
+    # superseded pre-purge tmp files).
     # Live deletion-vector sidecars count as referenced (an operator
     # deleting "vacuum fodder" must never reap one -- review r12e-3).
     referenced = {f for fs in per_version_files.values() for f in fs}
@@ -278,7 +278,7 @@ def verify_table(spark: SparkSession, table_dir: str,
     # vacuum fodder and never saw a genuine orphan nested inside one
     from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import _walk_rel_files
 
-    for v in versions:
+    for v in walked:
         vdir = os.path.join(table_dir, f"v_{v:08d}")
         if not os.path.isdir(vdir):
             continue
@@ -327,8 +327,7 @@ def repair_table(spark: SparkSession, table_dir: str,
     try:
         versions = [v for v in committed_versions(table_dir,
                                                   backend=backend)
-                    if os.path.isdir(os.path.join(table_dir,
-                                                  f"v_{v:08d}"))]
+                    if _readable(table_dir, v)]
         root = os.path.abspath(table_dir)
         # column surface per file = union of what ANY manifest
         # tracks, held PER VERSION (manifests speak each version's

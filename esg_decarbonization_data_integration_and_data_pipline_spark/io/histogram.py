@@ -54,23 +54,22 @@ from __future__ import annotations
 
 import json
 import math
-import os
+from functools import partial
 
 from pyspark.sql import SparkSession
 
+from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
+    NUMERIC,
+    build_missing,
+    load_version,
+    resolve_column,
+    walk_sidecars,
+)
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
-    _DEFAULT_BACKEND,
     CommitBackend,
-    _data_files,
-    _physical_name,
-    current_version,
-    table_schema,
 )
 
 HIST_NB = 512  # buckets per sidecar (~4 KiB JSON)
-
-_INT_TYPES = ("byte", "short", "integer", "long")
-_FLOAT_TYPES = ("float", "double")
 
 
 def quantize(v, scale: int) -> int:
@@ -83,19 +82,14 @@ def quantize(v, scale: int) -> int:
     return int(math.floor(v * (10 ** scale) + 0.5))
 
 
-def _sidecar_path(abs_data_path: str, col: str) -> str:
-    d, base = os.path.split(abs_data_path)
-    return os.path.join(d, f".hist-{col}-{base}.json")
-
-
 def _grid_of(payload: dict) -> tuple[int, int, int, int]:
     return (payload["lo"], payload["width"], payload["nb"],
             payload["scale"])
 
 
-def _build_sidecar(abs_path: str, col: str, scale: int,
-                   grid: tuple[int, int, int]) -> None:
-    """One file's bucket-count sidecar (executor task): numpy batch
+def _payload(abs_path: str, col: str, scale: int,
+             grid: tuple[int, int, int]) -> dict:
+    """One file's bucket-count payload (executor task): numpy batch
     quantize + floor-div + bincount; a file whose physical schema
     lacks the column (pre-evolution) is all-NULL there."""
     import numpy as np
@@ -125,28 +119,9 @@ def _build_sidecar(abs_path: str, col: str, scale: int,
             counts = np.bincount(b, minlength=nb).astype(np.int64)
     else:
         n_null = pf.metadata.num_rows
-    payload = {"scale": scale, "lo": int(lo), "width": int(width),
-               "nb": int(nb), "n_null": int(n_null),
-               "counts": [int(x) for x in counts]}
-    tmp = _sidecar_path(abs_path, col) + ".tmp"
-    with open(tmp, "w", encoding="ascii") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, _sidecar_path(abs_path, col))
-
-
-def _validate_column(table_dir: str, col: str, n: int):
-    st = table_schema(table_dir, n)
-    if st is not None and col not in st.fieldNames():
-        raise ValueError(
-            f"histogram on {col!r}: not a column of {table_dir} "
-            f"v_{n:08d} (schema: {st.fieldNames()})")
-    if st is not None:
-        tn = st[col].dataType.typeName()
-        if tn not in _INT_TYPES + _FLOAT_TYPES:
-            raise TypeError(
-                f"histogram on {col!r} ({tn}): only numeric columns "
-                f"are supported -- the quantize recipe is numeric")
-    return st
+    return {"scale": scale, "lo": int(lo), "width": int(width),
+            "nb": int(nb), "n_null": int(n_null),
+            "counts": [int(x) for x in counts]}
 
 
 def build_histogram_index(spark: SparkSession, table_dir: str,
@@ -164,42 +139,24 @@ def build_histogram_index(spark: SparkSession, table_dir: str,
     aggregate job.  Returns how many sidecars were built."""
     from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import read_version
 
-    backend = backend or _DEFAULT_BACKEND
-    if n is None:
-        n = current_version(table_dir, backend=backend)
-        if n is None:
-            raise FileNotFoundError(
-                f"{table_dir} has no committed version")
-    st = _validate_column(table_dir, col, n)
+    n, _st, phys = resolve_column(table_dir, col, n, backend, "hist",
+                                  NUMERIC)
     if scale < 0:
         raise ValueError(f"histogram scale must be >= 0, got {scale}")
-    phys = _physical_name(st, col) if st is not None else col
-    root = os.path.abspath(table_dir)
-    files = _data_files(table_dir, n)
-    grids = set()
-    for rel in files:
-        try:
-            with open(_sidecar_path(os.path.join(root, rel), phys),
-                      encoding="ascii") as fh:
-                grids.add(_grid_of(json.load(fh)))
-        except OSError:
-            continue
+    grids = {_grid_of(p) for p in load_version(
+        table_dir, n, "hist", col, phys).values() if p is not None}
     if not grids:
         # none of THIS version's files is sketched yet, but another
         # version's may be (a copy-on-write rewrite can replace every
         # file, e.g. a spread-out delete): the one-grid-per-column
         # contract scans the whole table before minting a new grid,
         # else cross-version merges would silently diverge
-        prefix = f".hist-{phys}-"
-        for d, _dirs, entries in os.walk(root):
-            for e in entries:
-                if e.startswith(prefix) and e.endswith(".json"):
-                    try:
-                        with open(os.path.join(d, e),
-                                  encoding="ascii") as fh:
-                            grids.add(_grid_of(json.load(fh)))
-                    except (OSError, ValueError, KeyError):
-                        continue
+        for path in walk_sidecars(table_dir, "hist", phys):
+            try:
+                with open(path, encoding="ascii") as fh:
+                    grids.add(_grid_of(json.load(fh)))
+            except (OSError, ValueError, KeyError):
+                continue
     if len(grids) > 1:
         raise ValueError(
             f"histogram on {col!r}: {table_dir} v_{n:08d} carries "
@@ -225,16 +182,9 @@ def build_histogram_index(spark: SparkSession, table_dir: str,
             hi = quantize(row["hi"], scale)
             nb = HIST_NB
             width = (hi - lo) // nb + 1
-    todo = [f for f in files
-            if not os.path.exists(
-                _sidecar_path(os.path.join(root, f), phys))]
-    if not todo:
-        return 0
-    grid = (lo, width, nb)
-    spark.sparkContext.parallelize(todo, len(todo)).foreach(
-        lambda rel: _build_sidecar(os.path.join(root, rel), phys,
-                                   scale, grid))
-    return len(todo)
+    return build_missing(spark, table_dir, n, "hist", phys,
+                         partial(_payload, scale=scale,
+                                 grid=(lo, width, nb)))
 
 
 def column_histogram(table_dir: str, col: str, n: int | None = None,
@@ -247,44 +197,24 @@ def column_histogram(table_dir: str, col: str, n: int | None = None,
     ``ValueError`` on mixed grids."""
     import numpy as np
 
-    backend = backend or _DEFAULT_BACKEND
-    if n is None:
-        n = current_version(table_dir, backend=backend)
-        if n is None:
-            raise FileNotFoundError(
-                f"{table_dir} has no committed version")
-    st = _validate_column(table_dir, col, n)
-    phys = _physical_name(st, col) if st is not None else col
-    root = os.path.abspath(table_dir)
+    n, _st, phys = resolve_column(table_dir, col, n, backend, "hist",
+                                  NUMERIC)
     grid = None
     counts = None
     n_null = 0
-    missing = []
-    for rel in _data_files(table_dir, n):
-        sp = _sidecar_path(os.path.join(root, rel), phys)
-        try:
-            with open(sp, encoding="ascii") as fh:
-                payload = json.load(fh)
-        except OSError:
-            missing.append(rel)
-            continue
+    for rel, payload in load_version(table_dir, n, "hist", col, phys,
+                                     strict=True).items():
         g = _grid_of(payload)
         if grid is None:
             grid = g
             counts = np.zeros(g[2], dtype=np.int64)
         elif g != grid:
             raise ValueError(
-                f"histogram on {col!r}: sidecar {sp} carries grid "
+                f"histogram on {col!r}: sidecar of {rel} carries grid "
                 f"{g}, expected {grid} -- delete the stale sidecars "
                 f"and re-run build_histogram_index")
         counts += np.asarray(payload["counts"], dtype=np.int64)
         n_null += payload["n_null"]
-    if missing:
-        raise FileNotFoundError(
-            f"histogram on {col!r}: {len(missing)} data file(s) of "
-            f"{table_dir} v_{n:08d} have no sidecar (first: "
-            f"{missing[0]}); run build_histogram_index(spark, "
-            f"table_dir, {col!r}, n={n})")
     if grid is None:  # zero data files
         return {"lo": 0, "width": 1, "nb": HIST_NB, "scale": 0,
                 "counts": [0] * HIST_NB, "n_null": 0, "total": 0}

@@ -14,11 +14,11 @@ shuffle and a driver-side merge of ``files x 4 KiB`` sidecars.
 
 The sketch is deliberately ENGINE-INDEPENDENT and deterministic:
 values hash with md5 over the canonical ``str(value)`` utf-8 bytes
-(the operators/bloom.py discipline), the register index is the top
-12 bits of a 60-bit hex prefix and the rank is the leading-zero
-count of the remaining 48 bits -- all reproducible in ANSI SQL, so
-the DuckDB oracle can re-derive the EXACT estimate (not just an
-error band) and the driver gate hash-compares it.
+(``sidecars.canonical_md5``, shared with the Bloom kind), the
+register index is the top 12 bits of a 60-bit hex prefix and the
+rank is the leading-zero count of the remaining 48 bits -- all
+reproducible in ANSI SQL, so the DuckDB oracle can re-derive the
+EXACT estimate (not just an error band) and compare it by hash.
 
 Precision: p = 12 -> m = 4096 registers, ~1.04/sqrt(m) = 1.6%
 standard error; the estimator applies linear counting below 2.5 m
@@ -41,19 +41,20 @@ Caveats (documented, matching the bloom index):
 from __future__ import annotations
 
 import base64
-import hashlib
-import json
-import os
 
 from pyspark.sql import SparkSession
 
+from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
+    HASHED,
+    HASHED_ARROW,
+    build_missing,
+    canonical_md5,
+    load_version,
+    resolve_column,
+    type_error,
+)
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
-    _DEFAULT_BACKEND,
     CommitBackend,
-    _data_files,
-    _physical_name,
-    current_version,
-    table_schema,
 )
 
 HLL_P = 12
@@ -67,25 +68,17 @@ _SCALE_BITS = _REST_BITS + 1
 # bias constant for m >= 128 (Flajolet et al. 2007)
 HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
 
-_SUPPORTED_PA_PREFIXES = ("int", "uint", "string", "large_string")
-
 
 def _register(value) -> tuple[int, int]:
     """(register index, rank) of one value -- the canonical recipe
     shared verbatim with the SQL oracle: 15 hex chars of md5 = 60
     bits (stays positive in a signed 64-bit SQL integer), top 12 =
     index, rank = leading-zero count of the low 48 + 1."""
-    h = int(hashlib.md5(str(value).encode("utf-8")).hexdigest()[:15],
-            16)
+    h = int.from_bytes(canonical_md5(value)[:8], "big") >> 4
     idx = h >> _REST_BITS
     rest = h & ((1 << _REST_BITS) - 1)
     rank = _REST_BITS - rest.bit_length() + 1
     return idx, rank
-
-
-def _sidecar_path(abs_data_path: str, col: str) -> str:
-    d, base = os.path.split(abs_data_path)
-    return os.path.join(d, f".ndv-{col}-{base}.json")
 
 
 def _registers_from_values(values) -> bytearray:
@@ -100,10 +93,8 @@ def _registers_from_values(values) -> bytearray:
 
     regs = np.zeros(HLL_M, dtype=np.uint8)
     if values:
-        md5 = hashlib.md5
         # top 60 bits of the digest == int(hexdigest[:15], 16)
-        buf = b"".join(md5(v.encode("utf-8")).digest()[:8]
-                       for v in values)
+        buf = b"".join(canonical_md5(v)[:8] for v in values)
         h = np.frombuffer(buf, dtype=">u8").astype(np.uint64)
         h >>= np.uint64(4)
         idx = (h >> np.uint64(_REST_BITS)).astype(np.int64)
@@ -122,8 +113,8 @@ def _registers_from_values(values) -> bytearray:
     return bytearray(regs.tobytes())
 
 
-def _build_sidecar(abs_path: str, col: str) -> None:
-    """One file's register sidecar (executor task).  A file whose
+def _payload(abs_path: str, col: str) -> dict:
+    """One file's register payload (executor task).  A file whose
     physical schema lacks the column (pre-evolution) is all-NULL
     there and contributes nothing: zeroed registers."""
     import pyarrow as pa
@@ -134,11 +125,8 @@ def _build_sidecar(abs_path: str, col: str) -> None:
     regs = bytearray(HLL_M)
     if col in pf.schema_arrow.names:
         pa_type = str(pf.schema_arrow.field(col).type)
-        if not pa_type.startswith(_SUPPORTED_PA_PREFIXES):
-            raise TypeError(
-                f"ndv sketch on {col!r} ({pa_type}): only integer "
-                f"and string columns are supported -- the canonical "
-                f"str() hash encoding is unstable for other types")
+        if pa_type not in HASHED_ARROW:
+            raise type_error("ndv", col, pa_type, HASHED)
         t = pq.read_table(abs_path, columns=[col])
         # registers depend only on the value SET, so dedup in Arrow
         # C++ before paying the per-value md5 (on a repeat-heavy
@@ -148,12 +136,7 @@ def _build_sidecar(abs_path: str, col: str) -> None:
         vals = pc.cast(t.column(col).drop_null().unique(),
                        pa.large_string()).to_pylist()
         regs = _registers_from_values(vals)
-    payload = {"p": HLL_P,
-               "regs": base64.b64encode(bytes(regs)).decode()}
-    tmp = _sidecar_path(abs_path, col) + ".tmp"
-    with open(tmp, "w", encoding="ascii") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, _sidecar_path(abs_path, col))
+    return {"p": HLL_P, "regs": base64.b64encode(bytes(regs)).decode()}
 
 
 def build_ndv_index(spark: SparkSession, table_dir: str, col: str,
@@ -163,36 +146,9 @@ def build_ndv_index(spark: SparkSession, table_dir: str, col: str,
     (default: current) data files -- one executor task per file,
     each streaming one parquet column; existing sidecars are skipped
     (data files are immutable).  Returns how many were built."""
-    backend = backend or _DEFAULT_BACKEND
-    if n is None:
-        n = current_version(table_dir, backend=backend)
-        if n is None:
-            raise FileNotFoundError(
-                f"{table_dir} has no committed version")
-    st = table_schema(table_dir, n)
-    if st is not None and col not in st.fieldNames():
-        raise ValueError(
-            f"ndv sketch on {col!r}: not a column of {table_dir} "
-            f"v_{n:08d} (schema: {st.fieldNames()})")
-    if st is not None and st[col].dataType.typeName() not in (
-            "byte", "short", "integer", "long", "string"):
-        raise TypeError(
-            f"ndv sketch on {col!r} ({st[col].dataType.typeName()}): "
-            f"only integer and string columns are supported -- the "
-            f"canonical str() hash encoding is unstable for other "
-            f"types")
-    # sidecars key on the stable PHYSICAL name, so rename_column
-    # invalidates nothing (the bloom-index discipline)
-    phys = _physical_name(st, col)
-    root = os.path.abspath(table_dir)
-    todo = [f for f in _data_files(table_dir, n)
-            if not os.path.exists(
-                _sidecar_path(os.path.join(root, f), phys))]
-    if not todo:
-        return 0
-    spark.sparkContext.parallelize(todo, len(todo)).foreach(
-        lambda rel: _build_sidecar(os.path.join(root, rel), phys))
-    return len(todo)
+    n, _st, phys = resolve_column(table_dir, col, n, backend, "ndv",
+                                  HASHED)
+    return build_missing(spark, table_dir, n, "ndv", phys, _payload)
 
 
 def hll_estimate(regs) -> int:
@@ -231,31 +187,15 @@ def column_ndv(table_dir: str, col: str, n: int | None = None,
     ``FileNotFoundError`` listing uncovered files when sidecars are
     missing (run :func:`build_ndv_index`), unless ``allow_partial``
     (then the estimate covers the sketched files only)."""
-    backend = backend or _DEFAULT_BACKEND
-    if n is None:
-        n = current_version(table_dir, backend=backend)
-        if n is None:
-            raise FileNotFoundError(
-                f"{table_dir} has no committed version")
-    st = table_schema(table_dir, n)
-    if st is not None and col not in st.fieldNames():
-        # a typo'd column would otherwise read as "every sidecar
-        # missing" -- a misleading FileNotFoundError, or with
-        # allow_partial a silently wrong 0 (r14 review finding)
-        raise ValueError(
-            f"ndv sketch on {col!r}: not a column of {table_dir} "
-            f"v_{n:08d} (schema: {st.fieldNames()})")
-    phys = _physical_name(st, col) if st is not None else col
-    root = os.path.abspath(table_dir)
+    # a typo'd column would otherwise read as "every sidecar
+    # missing" -- a misleading FileNotFoundError, or with
+    # allow_partial a silently wrong 0
+    n, _st, phys = resolve_column(table_dir, col, n, backend, "ndv")
     merged = bytearray(HLL_M)
-    missing = []
-    for rel in _data_files(table_dir, n):
-        sp = _sidecar_path(os.path.join(root, rel), phys)
-        try:
-            with open(sp, encoding="ascii") as fh:
-                payload = json.load(fh)
-        except OSError:
-            missing.append(rel)
+    for rel, payload in load_version(
+            table_dir, n, "ndv", col, phys,
+            strict=not allow_partial).items():
+        if payload is None:
             continue
         regs = base64.b64decode(payload["regs"])
         # the 'p' field exists to catch precision drift: merging a
@@ -263,17 +203,11 @@ def column_ndv(table_dir: str, col: str, n: int | None = None,
         # estimate instead of demanding a rebuild
         if payload.get("p") != HLL_P or len(regs) != HLL_M:
             raise ValueError(
-                f"ndv sidecar {sp} has precision p="
+                f"ndv sidecar of {rel} has precision p="
                 f"{payload.get('p')} / {len(regs)} registers but "
                 f"this build expects p={HLL_P} / {HLL_M}; delete "
                 f"the stale sidecars and re-run build_ndv_index")
         for i, r in enumerate(regs):
             if r > merged[i]:
                 merged[i] = r
-    if missing and not allow_partial:
-        raise FileNotFoundError(
-            f"ndv sketch on {col!r}: {len(missing)} data file(s) of "
-            f"{table_dir} v_{n:08d} have no sidecar (first: "
-            f"{missing[0]}); run build_ndv_index(spark, table_dir, "
-            f"{col!r}, n={n}) or pass allow_partial=True")
     return hll_estimate(merged)

@@ -126,6 +126,7 @@ _V_RE = re.compile(r"^v_(\d{8})(?:\s+(\d+(?:\.\d+)?))?$")
 _VDIR_RE = re.compile(r"^v_(\d{8})$")
 _CURRENT = "_CURRENT"
 _STAGE_PREFIX = ".stage-"
+_VACUUMED = "_VACUUMED"
 _FLIP_LOCK = "._CURRENT.lock"
 _FLIP_LOCK_TTL = 60.0  # s; a flip is two tiny file ops -- a lock older
 #                        than this belongs to a crashed writer
@@ -403,6 +404,16 @@ def _versions(table_dir: str) -> list[int]:
         if m and os.path.isdir(os.path.join(table_dir, entry)):
             out.append(int(m.group(1)))
     return sorted(out)
+
+
+def _readable(table_dir: str, n: int) -> bool:
+    """Whether version ``n``'s dir can still be read.  :func:`vacuum`
+    deletes an expired version's dir -- or, while a kept version
+    still references data files inside it, keeps the dir as a data
+    holder and marks it ``_VACUUMED``."""
+    vdir = os.path.join(table_dir, f"v_{n:08d}")
+    return os.path.isdir(vdir) and \
+        not os.path.exists(os.path.join(vdir, _VACUUMED))
 
 
 def current_version(table_dir: str,
@@ -870,9 +881,7 @@ def _read_files_with_pos(spark: SparkSession, table_dir: str,
 
 
 def _read_files_dv(spark: SparkSession, table_dir: str, n: int,
-                   rel_files, st,
-                   dvs: dict[str, tuple[str, int]] | None = None
-                   ) -> DataFrame:
+                   rel_files, st) -> DataFrame:
     """THE version-aware file reader: :func:`_read_files`, minus the
     rows version ``n``'s deletion vectors mark deleted.  Files
     without a DV take the plain scan; dv-bearing files scan with row
@@ -881,7 +890,7 @@ def _read_files_dv(spark: SparkSession, table_dir: str, n: int,
     control-plane sized by contract: a delete touching a large
     fraction of the table should be :func:`delete_keys_version`'s
     copy-on-write rewrite instead)."""
-    dvs = _read_dvs(table_dir, n) if dvs is None else dvs
+    dvs = _read_dvs(table_dir, n)
     files = list(rel_files)
     hit = [f for f in files if f in dvs]
     if not hit:
@@ -910,14 +919,6 @@ def _read_files_dv(spark: SparkSession, table_dir: str, n: int,
 
 
 _DV_BROADCAST_ROWS = 4_000_000
-
-# read_versions cost gate: by-file dedup engages only when the
-# duplicated scan bytes (sum over files of (refs - 1) x size) exceed
-# this; below it the per-(version, file) union re-reads page-cached
-# data faster than the explode attribution costs (interleaved A/B,
-# r16).  Env-overridable (SPARK_GRAFT_READ_DEDUP_MIN_BYTES) so tests
-# and deployments can pin either path; both are result-identical.
-READ_DEDUP_MIN_BYTES = 256 * 1024 * 1024
 
 
 def _apply_dv(spark: SparkSession, table_dir: str,
@@ -1097,11 +1098,6 @@ def _file_meta(path: str, columns) -> tuple[dict[str, tuple], dict]:
         if ok_nn:
             nn[col] = nulls
     return stats, {"n": md.num_rows, "nn": nn}
-
-
-def _file_stats(path: str, columns) -> dict[str, tuple]:
-    """Per-column (min, max) of one parquet file (see _file_meta)."""
-    return _file_meta(path, columns)[0]
 
 
 def _snapshot_meta(staged: str, rel_files, schema, stats_columns
@@ -3796,8 +3792,7 @@ def restore_table(spark: SparkSession, table_dir: str, to_version: int,
             f"(committed: {committed})")
     if to_version == cur:
         return cur
-    if not os.path.isdir(os.path.join(table_dir,
-                                      f"v_{to_version:08d}")):
+    if not _readable(table_dir, to_version):
         raise ValueError(
             f"v_{to_version} of {table_dir} was vacuumed; only "
             f"readable versions can be restored")
@@ -4263,7 +4258,7 @@ def read_version(spark: SparkSession, table_dir: str, n: int,
             f"(current is v_{committed[-1]:08d}; committed versions: "
             f"{committed}); an on-disk dir with that number is a "
             f"crashed or superseded claim no reader ever resolved")
-    if not os.path.isdir(os.path.join(table_dir, f"v_{n:08d}")):
+    if not _readable(table_dir, n):
         raise FileNotFoundError(
             f"version v_{n:08d} of {table_dir} was committed but has "
             f"been vacuumed; raise vacuum's keep_last to travel this "
@@ -4274,56 +4269,21 @@ def read_version(spark: SparkSession, table_dir: str, n: int,
 def read_versions(spark: SparkSession, table_dir: str, versions,
                   version_col: str = "__version",
                   backend: CommitBackend | None = None) -> DataFrame:
-    """Multi-version read with BY-FILE dedup: every physical data
-    file is scanned ONCE, not once per referencing version, and each
-    row is attributed to every version that contains it through a
-    broadcast (file-suffix -> versions) map + explode.  Returns the
-    versions' shared pinned schema prefixed with ``version_col``
-    (int); rows per version are identical to
-    ``read_version(n).withColumn(version_col, lit(n))``.
+    """Multi-version read: the union of each version's own read,
+    tagged with ``version_col`` (int), in ONE DataFrame so the
+    multi-version audits run as one job.  Returns the versions'
+    shared pinned schema prefixed with ``version_col``; rows per
+    version are identical to
+    ``read_version(n).withColumn(version_col, lit(n))``.  A file that
+    several versions reference is scanned once per version.
 
-    Why: the multi-version audits union per-version reads into one
-    job, and on a manifest-append history version N+1 re-lists every
-    file of version N -- a 3-version union read shared files three
-    times (~2x wasted scan I/O on append-heavy histories; the r15
-    round's top known gap).  Here the shuffle/aggregate volume above
-    the scan is unchanged (the explode emits exactly the rows the
-    per-version union emitted), but each file's bytes are read and
-    decoded once.
-
-    How: files group by their version-MEMBERSHIP signature (the
-    sorted tuple of referencing versions); each group scans once and
-    explodes a LITERAL version array -- no per-row file-path
-    decoding, no join (a first cut attributed via a broadcast
-    (_metadata.file_path-suffix -> versions) map, and the per-row
-    regexp+url_decode+join cost measurably exceeded the scan savings
-    on small inputs).  A multi-version group costs one
-    `explode(lit(array))` per row; a single-version group attaches
-    `lit(version)` directly.
-
-    Cost gate: the dedup only engages when the DUPLICATED bytes (sum
-    over files of (refs - 1) x file size) exceed
-    ``SPARK_GRAFT_READ_DEDUP_MIN_BYTES`` (default 256 MB).  Below it
-    -- small tables whose shared files sit in the page cache -- the
-    read keeps the r15 one-scan-per-(version, file) union, which
-    interleaved A/Bs floor ~10-20% faster there (the explode is pure
-    overhead when re-reading is ~free); above it the re-read I/O
-    dominates and each file scans once.  Both paths return identical
-    rows (pinned by tests/test_versioned_multiread.py), so the gate
-    is a cost decision, never a semantic one.
-
-    Scope guards (each falls back to correctness, never silently
-    misreads):
-    - every requested version must pin the SAME schema (field names,
-      types, and physical mapping); a schema-changing history raises
-      ``SchemaMismatchError`` -- callers group versions by schema
-      first (the :func:`read_version` semantics of "this version's
-      pinned schema drives its read" cannot hold across differing
-      schemas in one scan);
-    - a file carrying a DELETION VECTOR in some referencing version
-      reads through the per-version DV path for those versions (its
-      live row set differs by version); only DV-free attributions
-      share a scan.
+    Scope guard: every requested version must pin the SAME schema
+    (field names, types, and physical mapping); a schema-changing
+    history raises ``SchemaMismatchError`` -- callers group versions
+    by schema first (the :func:`read_version` semantics of "this
+    version's pinned schema drives its read" cannot hold across
+    differing schemas in one scan).  Each version reads through its
+    own deletion vectors.
     """
     from pyspark.sql import functions as F
 
@@ -4342,7 +4302,7 @@ def read_versions(spark: SparkSession, table_dir: str, versions,
             raise ValueError(
                 f"version v_{n:08d} of {table_dir} was never "
                 f"committed (committed versions: {committed})")
-        if not os.path.isdir(os.path.join(table_dir, f"v_{n:08d}")):
+        if not _readable(table_dir, n):
             raise FileNotFoundError(
                 f"version v_{n:08d} of {table_dir} was committed but "
                 f"has been vacuumed")
@@ -4359,84 +4319,15 @@ def read_versions(spark: SparkSession, table_dir: str, versions,
                 f"differ -- group versions by schema and read each "
                 f"group separately")
 
-    # membership signature -> files, for DV-free attributions;
-    # DV-bearing (version, file) pairs read through the masked path
-    membership: dict[str, list[int]] = {}
-    files_by_version: dict[int, list[str]] = {}
-    dv_per_version: dict[int, list[str]] = {}
-    dvs_by_version: dict[int, dict] = {}
-    for n in versions:
-        rel_files = _data_files(table_dir, n)
-        files_by_version[n] = rel_files
-        dvs = _read_dvs(table_dir, n)
-        dvs_by_version[n] = dvs
-        for f in rel_files:
-            if f in dvs:
-                dv_per_version.setdefault(n, []).append(f)
-            else:
-                membership.setdefault(f, []).append(n)
-
     cols = ([F.col(version_col)] +
             [F.col(f.name) for f in st.fields]) if st is not None \
         else None
     frames: list[DataFrame] = []
-
-    dup_bytes = 0
-    for f, vs in membership.items():
-        if len(vs) > 1:
-            try:
-                size = os.path.getsize(os.path.join(table_dir, f))
-            except OSError:
-                size = 0
-            dup_bytes += (len(vs) - 1) * size
-    min_dup = int(os.environ.get("SPARK_GRAFT_READ_DEDUP_MIN_BYTES",
-                                 READ_DEDUP_MIN_BYTES))
-    if dup_bytes < min_dup:
-        # cost gate: re-reading this little duplicated data is
-        # cheaper than the explode attribution -- keep the r15
-        # one-scan-per-(version, file) union
-        for n in versions:
-            f = (_read_files_dv(spark, table_dir, n,
-                                files_by_version[n], st,
-                                dvs=dvs_by_version[n])
-                 .withColumn(version_col,
-                             F.lit(int(n)).cast("int")))
-            frames.append(f.select(cols) if cols is not None else f)
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
-
-    by_sig: dict[tuple, list[str]] = {}
-    for f, vs in membership.items():
-        by_sig.setdefault(tuple(sorted(vs)), []).append(f)
-    for sig in sorted(by_sig):
-        grp = _read_files(spark, table_dir, sorted(by_sig[sig]), st)
-        ver = (F.lit(int(sig[0])).cast("int") if len(sig) == 1
-               else F.explode(F.lit(list(sig)).cast("array<int>")))
-        grp = grp.withColumn(version_col, ver)
-        frames.append(grp.select(cols) if cols is not None else grp)
-    for n in sorted(dv_per_version):
-        fs = dv_per_version[n]
-        masked = (_read_files_dv(
-                      spark, table_dir, n, fs, st,
-                      dvs={f: dvs_by_version[n][f] for f in fs})
-                  .withColumn(version_col,
-                              F.lit(int(n)).cast("int")))
-        frames.append(masked.select(cols) if cols is not None
-                      else masked)
-    if not frames:
-        # zero data files in every requested version: the pinned
-        # schema (+ version col) IS the read
-        if st is None:
-            raise ValueError(
-                f"read_versions: no data files and no pinned schema "
-                f"under {table_dir} -- nothing to derive a read from")
-        from pyspark.sql.types import IntegerType, StructField, StructType
-        empty_st = StructType(
-            [StructField(version_col, IntegerType(), False)]
-            + list(st.fields))
-        return spark.createDataFrame([], empty_st)
+    for n in versions:
+        f = (_read_files_dv(spark, table_dir, n,
+                            _data_files(table_dir, n), st)
+             .withColumn(version_col, F.lit(int(n)).cast("int")))
+        frames.append(f.select(cols) if cols is not None else f)
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
@@ -4589,8 +4480,7 @@ def read_changes(spark: SparkSession, table_dir: str, from_n: int,
                      if from_n < x <= to_n), reverse=True):
         b = _base_of(table_dir, c)
         if (b is not None and b in committed and from_n <= b < c
-                and os.path.isdir(os.path.join(table_dir,
-                                               f"v_{b:08d}"))):
+                and _readable(table_dir, b)):
             left = read_changes(spark, table_dir, from_n, b,
                                 backend=backend)
             right = read_changes(spark, table_dir, c, to_n,
@@ -4689,8 +4579,7 @@ def consume_changes(spark: SparkSession, table_dir: str,
         # union them in as inserts.
         from pyspark.sql import functions as F
 
-        readable = [n for n in committed
-                    if os.path.isdir(os.path.join(table_dir, f"v_{n:08d}"))]
+        readable = [n for n in committed if _readable(table_dir, n)]
         first = readable[0] if readable else cur
         changes = (_read_resolved(spark, table_dir, first)
                    .withColumn("_change_type", F.lit("insert"))
@@ -4725,9 +4614,7 @@ def describe_table(table_dir: str,
     return {
         "current": cur,
         "committed": len(committed),
-        "readable": sum(
-            1 for n in committed
-            if os.path.isdir(os.path.join(table_dir, f"v_{n:08d}"))),
+        "readable": sum(1 for n in committed if _readable(table_dir, n)),
         "n_files": len(files),
         "bytes": sum(os.path.getsize(os.path.join(table_dir, f))
                      for f in files
@@ -4748,7 +4635,7 @@ def describe_table(table_dir: str,
 
 def history(table_dir: str,
             backend: CommitBackend | None = None) -> list[dict]:
-    """The table's committed, still-on-disk versions, oldest first:
+    """The table's committed, still-readable versions, oldest first:
     ``{"version", "kind" ("snapshot"|"append"), "n_files", "txns",
     "current", "committed_at" (epoch seconds; None for lines
     predating commit timestamps)}``.  ``n_files`` counts the files a reader of that
@@ -4771,7 +4658,7 @@ def history(table_dir: str,
     out: list[dict] = []
     for n in sorted(committed):
         vname = f"v_{n:08d}"
-        if not os.path.isdir(os.path.join(table_dir, vname)):
+        if not _readable(table_dir, n):
             continue  # committed but vacuumed -- no longer readable
         mf = _read_manifest(table_dir, n)
         inherits = mf is not None and any(
@@ -4794,6 +4681,35 @@ def history(table_dir: str,
     return out
 
 
+def _retire_holder(table_dir: str, n: int, refs: set[str]) -> None:
+    """Mark ``v_n`` vacuumed and delete the files in its dir that no
+    retained version references (``refs``), with their per-file stats
+    sidecars: rows only the retired version read -- e.g. the
+    pre-merge copy of a rewritten file -- must not outlive it where
+    purge and fsck, which walk readable versions, cannot see them.
+    Marked first, so a crash mid-delete leaves an unreadable version,
+    never a dangling one; the next vacuum finishes the sweep."""
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
+        sidecar_candidates,
+    )
+
+    vname = f"v_{n:08d}"
+    vdir = os.path.join(table_dir, vname)
+    with open(os.path.join(vdir, _VACUUMED), "w"):
+        pass
+    for rel in _walk_rel_files(vdir):
+        if f"{vname}/{rel}" in refs:
+            continue
+        path = os.path.join(vdir, rel)
+        d, base = os.path.split(path)
+        for p in (*sidecar_candidates(path),
+                  os.path.join(d, f".{base}.crc"), path):
+            try:
+                os.remove(p)
+            except OSError:
+                pass
+
+
 def vacuum(table_dir: str, keep_last: int = 2,
            stage_ttl_seconds: float = 6 * 3600,
            backend: CommitBackend | None = None,
@@ -4801,6 +4717,10 @@ def vacuum(table_dir: str, keep_last: int = 2,
     """Remove crash leftovers (aged ``.stage-*`` dirs, orphan claimed
     versions) and versions older than the ``keep_last`` most recent;
     NEVER the current version.  Returns the removed version numbers.
+    An expired version whose dir a kept version still reads files
+    from is not removed but retired (:func:`_retire_holder`): it
+    reads as vacuumed, and only the files kept versions reference
+    stay in its dir.
     ``dry_run=True`` (the Delta ``VACUUM ... DRY RUN`` shape) reports
     the version numbers that WOULD be removed and touches nothing --
     crash leftovers included.
@@ -4853,29 +4773,37 @@ def vacuum(table_dir: str, keep_last: int = 2,
     # retention, or it would evict a REAL committed version earlier
     # than keep_last implies (r8 advisor finding)
     committed = [n for n in vs if n in cset]
-    keep = set(committed[-keep_last:])
+    retained = set(committed[-keep_last:])
     if cur is not None:
-        keep.add(cur)
+        retained.add(cur)
+    keep = set(retained)
     # manifest-append versions hold data BY REFERENCE into older
     # dirs: every dir a kept version's manifest points into must
     # survive, however old, or the kept version dangles.  One level
     # suffices -- manifests list concrete data files, never other
     # manifests.
-    for n in sorted(keep):
+    refs: set[str] = set()  # files (data + DV) retained versions read
+    for n in sorted(retained):
         mf = _read_manifest(table_dir, n)
         if mf is None:
             continue
-        for rel in mf[0]:
-            m = _VDIR_RE.match(rel.split("/", 1)[0])
-            if m:
-                keep.add(int(m.group(1)))
+        refs.update(mf[0])
         # deletion-vector sidecars are references into older version
         # dirs exactly like data files -- a kept version's vectors
         # must survive or its reads resurface the deleted rows
-        for _f, (d, _cnt) in _read_dvs(table_dir, n).items():
-            m = _VDIR_RE.match(d.split("/", 1)[0])
-            if m:
-                keep.add(int(m.group(1)))
+        refs.update(d for d, _cnt in _read_dvs(table_dir, n).values())
+    for rel in refs:
+        m = _VDIR_RE.match(rel.split("/", 1)[0])
+        if m:
+            keep.add(int(m.group(1)))
+    # an expired version whose dir survives only as a data holder for
+    # retained versions is retired: its own manifest may list files
+    # of dirs reaped here, so it reads as vacuumed, not dangles
+    retired = [n for n in vs
+               if n in keep and n not in retained and n in cset]
+    if not dry_run:
+        for n in retired:
+            _retire_holder(table_dir, n, refs)
     for n in vs:
         full = os.path.join(table_dir, f"v_{n:08d}")
         if n in keep:
@@ -4904,16 +4832,16 @@ def vacuum(table_dir: str, keep_last: int = 2,
         if not dry_run:
             shutil.rmtree(full, ignore_errors=True)
         removed.append(n)
-    # root-level consolidated bloom indexes (io/bloom_index) of reaped
+    # root-level consolidated bloom indexes (io/sidecars) of reaped
     # versions are now dead metadata -- drop them with their version
     # (one listdir for the whole removed set, matched on the same
     # name shape consolidated_candidates centralizes)
-    if removed and not dry_run:
-        from esg_decarbonization_data_integration_and_data_pipline_spark.io.bloom_index import (
+    if (removed or retired) and not dry_run:
+        from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
             consolidated_candidates,
         )
 
-        suffixes = tuple(f"-v_{n:08d}.json" for n in removed)
+        suffixes = tuple(f"-v_{n:08d}.json" for n in removed + retired)
         for p in consolidated_candidates(table_dir):
             if p.endswith(suffixes):
                 try:

@@ -6,7 +6,6 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.operators.joins
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.operators.reshape import melt, pivot_wide
 from esg_decarbonization_data_integration_and_data_pipline_spark.operators.rollup import rollup_all
-from esg_decarbonization_data_integration_and_data_pipline_spark.operators.skew import salted_join
 from esg_decarbonization_data_integration_and_data_pipline_spark.operators.windows import (
     group_agg_as_column, latest_version, rank_in_group, share_of_total,
     top1_per_group, ytm_cumsum,
@@ -15,6 +14,6 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.operators.windo
 __all__ = [
     "anti_join", "asof_join", "attach_scalar", "coalescing_outer_join",
     "interval_join", "semi_join", "melt", "pivot_wide", "rollup_all",
-    "salted_join", "group_agg_as_column", "latest_version", "rank_in_group",
+    "group_agg_as_column", "latest_version", "rank_in_group",
     "share_of_total", "top1_per_group", "ytm_cumsum",
 ]

@@ -25,8 +25,10 @@ Scale design:
   Arrow ONCE per bucket group, never per batch row (a join would
   attach the multi-MB blob to every row).
 - Membership hashing is the standard double-hash scheme
-  (h1 + i*h2 mod m) over two independent xxhash64 seeds, computed
-  JVM-side; the Python kernel only does vectorized numpy bit math.
+  (h1 + i*h2 mod m, ``sidecars.bloom_positions`` -- the kernel the
+  per-file Bloom sidecars share) over two independent xxhash64
+  seeds, computed JVM-side; the Python kernel only does vectorized
+  numpy bit math.
 
 Reference: the reference dedups by re-loading and comparing full
 tables (jobs/csr_etl.py delete-then-insert); this is the Spark-first
@@ -41,6 +43,10 @@ import math
 import numpy as np
 import pandas as pd  # module-level: pandas_udf resolves stringized hints
 from pyspark.sql import DataFrame, functions as F
+
+from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
+    bloom_positions,
+)
 
 _FP = "__fp1"     # primary 64-bit fingerprint (also the bucket source)
 _FP2 = "__fp2"    # independent second hash for double hashing
@@ -79,19 +85,6 @@ def _fingerprinted(df: DataFrame, text_col: str,
                            .cast("int")))
 
 
-def _positions(fp1: np.ndarray, fp2: np.ndarray, n_hashes: int,
-               m_bits: int) -> np.ndarray:
-    """(len, n_hashes) bit positions via double hashing, vectorized.
-    uint64 arithmetic wraps mod 2^64 (numpy overflow is the point);
-    |fp2 with 1 keeps the stride odd so probes don't collapse when
-    m_bits is even."""
-    h1 = fp1.astype(np.uint64)
-    h2 = fp2.astype(np.uint64) | np.uint64(1)
-    i = np.arange(n_hashes, dtype=np.uint64)
-    return ((h1[:, None] + i[None, :] * h2[:, None])
-            % np.uint64(m_bits)).astype(np.int64)
-
-
 def bloom_build(corpus: DataFrame, text_col: str = "text",
                 n_buckets: int = 64,
                 bits_per_key: int = 10) -> DataFrame:
@@ -104,11 +97,12 @@ def bloom_build(corpus: DataFrame, text_col: str = "text",
     n_hashes = max(1, round(math.log(2) * bits_per_key))
 
     def make(pdf: pd.DataFrame) -> pd.DataFrame:
-        fp1 = pdf[_FP].to_numpy()
-        fp2 = pdf[_FP2].to_numpy()
+        fp1 = pdf[_FP].to_numpy(np.uint64)
+        fp2 = pdf[_FP2].to_numpy(np.uint64)
         m_bits = max(64, int(len(fp1) * bits_per_key))
         bits = np.zeros((m_bits + 7) // 8, dtype=np.uint8)
-        pos = _positions(fp1, fp2, n_hashes, m_bits).ravel()
+        pos = np.concatenate(bloom_positions(fp1, fp2, n_hashes,
+                                             m_bits))
         np.bitwise_or.at(bits, pos >> 3,
                          np.uint8(1) << (pos & 7).astype(np.uint8))
         return pd.DataFrame({
@@ -166,8 +160,9 @@ def bloom_update(bloom: DataFrame, new_docs: DataFrame,
                 f"(> {max_load}x its sized capacity); FPP has decayed "
                 f"-- rebuild with bloom_build over the current corpus "
                 f"(e.g. at compaction) or re-bucket with more buckets")
-        pos = _positions(b[_FP].to_numpy(), b[_FP2].to_numpy(),
-                         n_h, m_bits).ravel()
+        pos = np.concatenate(bloom_positions(
+            b[_FP].to_numpy(np.uint64), b[_FP2].to_numpy(np.uint64),
+            n_h, m_bits))
         np.bitwise_or.at(bits, pos >> 3,
                          np.uint8(1) << (pos & 7).astype(np.uint8))
         return pd.DataFrame({
@@ -204,8 +199,9 @@ def bloom_probe(batch: DataFrame, bloom: DataFrame,
         m_bits = int(bl["m_bits"].iloc[0])
         n_hashes = int(bl["n_hashes"].iloc[0])
         bits = np.frombuffer(bl["bits"].iloc[0], dtype=np.uint8)
-        pos = _positions(b[_FP].to_numpy(), b[_FP2].to_numpy(),
-                         n_hashes, m_bits)
+        pos = np.stack(bloom_positions(
+            b[_FP].to_numpy(np.uint64), b[_FP2].to_numpy(np.uint64),
+            n_hashes, m_bits), axis=1)
         hit = ((bits[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1) \
             .all(axis=1)
         return b.assign(maybe_seen=hit)

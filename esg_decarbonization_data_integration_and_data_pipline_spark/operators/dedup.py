@@ -24,14 +24,14 @@ All signatures use exact integer arithmetic reproducible in ANSI SQL
 from __future__ import annotations
 
 import pandas as pd  # module-level: pandas_udf resolves stringized type hints here
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from esg_decarbonization_data_integration_and_data_pipline_spark.operators.scale import (
     KERNEL_PARTITION_BYTES, SMALL_INPUT_BYTES, ensure_parallelism,
     plan_size_bytes,
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.operators.text import (
-    POLY_MOD, POLY_POWERS,
+    POLY_MOD,
 )
 
 # multipliers for the K minhash permutations h_a(x) = (a*x + a*7 + 13) mod p
@@ -42,9 +42,9 @@ MINHASH_P = 2147483647
 def with_bigram_shingles(df: DataFrame, text_col: str = "text",
                          out_col: str = "sh") -> DataFrame:
     """Attach distinct lowercase word-bigram shingles ('w1 w2') via an
-    Arrow-batched kernel (same output as the expression form below;
-    the element_at-chain expression re-evaluates the token array per
-    shingle and measured ~3x slower on 500-char docs)."""
+    Arrow-batched kernel (an element_at-chain SQL expression
+    re-evaluates the token array per shingle and measured ~3x slower
+    on 500-char docs)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<string>")
@@ -64,41 +64,9 @@ def with_bigram_shingles(df: DataFrame, text_col: str = "text",
     return df.withColumn(out_col, bigrams_udf(text_col))
 
 
-def bigram_shingles(text_col: str = "text") -> Column:
-    """Distinct lowercase word-bigram shingles as a single column
-    expression (prefer with_bigram_shingles in multi-use plans)."""
-    return F.expr(
-        f"array_distinct(transform(sequence(1, size(filter(split(lower({text_col}), '\\\\s+'), t -> t != '')) - 1), "
-        f"i -> concat(element_at(filter(split(lower({text_col}), '\\\\s+'), t -> t != ''), i), ' ', "
-        f"element_at(filter(split(lower({text_col}), '\\\\s+'), t -> t != ''), i + 1))))")
-
-
-# O(len) per-string polynomial hash: split to chars once, fold with a
-# (sum, position) struct accumulator -- the same integers as the
-# reference substring formulation but without the O(len^2) scans.
-_CHAR_HASH = (f"aggregate(split(g, ''), named_struct('s', 0L, 'k', 0), "
-              f"(acc, c) -> named_struct("
-              f"'s', acc.s + ascii(c) * element_at({POLY_POWERS}, (acc.k % 8) + 1), "
-              f"'k', acc.k + 1), acc -> acc.s % {POLY_MOD}L)")
-
-
-def shingle_hashes(shingles_col: str) -> Column:
-    """Polynomial hash per shingle (engine-independent)."""
-    return F.expr(f"transform({shingles_col}, g -> {_CHAR_HASH})")
-
-
-def minhash_signature(hashes_col: str) -> Column:
-    """K minhash values as an array<long> over the shingle hashes."""
-    mins = [
-        f"array_min(transform({hashes_col}, h -> (h * {a}L + {a * 7 + 13}L) % {MINHASH_P}L))"
-        for a in MINHASH_AS
-    ]
-    return F.expr(f"array({', '.join(mins)})")
-
-
 def _np_polyhash(s: str, powers) -> int:
     """Exact int64 polynomial hash of a string -- bit-identical to the
-    SQL _CHAR_HASH / DuckDB oracle formulation. ``powers`` is the
+    DuckDB oracle formulation. ``powers`` is the
     8-periodic coefficient array; it is re-tiled when a token exceeds
     its length (long URLs / base64 blobs in a real web corpus)."""
     import numpy as np

@@ -184,7 +184,7 @@ def report(df: DataFrame, checks: list[Check],
     ``group`` (r16): report PER VALUE of an existing column instead
     of over the whole frame -- the output gains that column and every
     check row repeats per group.  This is what lets a multi-version
-    audit run ONE by-file-deduped scan (io/versioned.read_versions)
+    audit run ONE multi-version read (io/versioned.read_versions)
     and still get per-version rows: same aggregate tree, keyed by the
     version column.  Note groupBy drops empty groups, so a group with
     ZERO rows yields no rows here (callers synthesize the empty-input
@@ -476,11 +476,8 @@ def check_table_versions(spark, table_dir: str, checks: list[Check],
     ONE Spark job with a single collect, instead of paying a
     job-scheduling round per version (r15; an N-version audit's
     collect latency was N x one control-plane fetch for O(#checks)
-    rows per version).  r16: within each same-schema version group
-    the scan half reads through :func:`read_versions` -- every
-    physical file scanned ONCE and attributed to its referencing
-    versions -- so an N-version audit over a manifest-append history
-    no longer re-reads shared files N times (the grouped
+    rows per version).  Within each same-schema version group the
+    scan half reads through :func:`read_versions` (the grouped
     :func:`report` keys the same aggregate tree by the version
     column).  Rows per version are identical to calling
     check_table(n=v) -- check_table itself delegates here."""
@@ -529,7 +526,7 @@ def check_table_versions(spark, table_dir: str, checks: list[Check],
         rows_by_ver[n] = rows
     # group the scan halves by pinned schema (within one group the
     # routing -- and so the scan check list -- is identical) and read
-    # each group through the by-file-deduped multi-version reader
+    # each group through the multi-version reader
     groups: dict[str | None, list[int]] = {}
     for n in scan_by_ver:
         sj = st_by_ver[n].json() if st_by_ver[n] is not None else None

@@ -46,7 +46,6 @@ def _spread(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # base-17 polynomial coefficients (17^0..17^7); small enough that
 # codepoint * coeff stays far below 2^63 even for CJK planes
 POLY_POWERS_PY = [1, 17, 289, 4913, 83521, 1419857, 24137569, 410338673]
-POLY_POWERS = "array(" + ", ".join(f"{p}L" for p in POLY_POWERS_PY) + ")"
 POLY_MOD = 1000000007
 
 EN_STOP = ["the", "a", "of", "and", "to", "in", "is"]
@@ -59,19 +58,6 @@ def tokens(text_col: str = "text") -> Column:
     """Lowercased whitespace tokens, empties removed (deterministic)."""
     return F.expr(
         f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')")
-
-
-def char_polyhash(expr: str) -> str:
-    """SQL expr: exact integer polynomial hash of a string, coeffs
-    cycling every 8 chars, mod 1e9+7. Engine-independent (document
-    fingerprinting primitive). O(len): one split to chars, then a
-    struct-accumulator fold (substring-per-char would be O(len^2))."""
-    return (f"aggregate(split({expr}, ''), "
-            f"named_struct('s', 0L, 'k', 0), "
-            f"(acc, c) -> named_struct("
-            f"'s', acc.s + ascii(c) * element_at({POLY_POWERS}, (acc.k % 8) + 1), "
-            f"'k', acc.k + 1), "
-            f"acc -> acc.s % {POLY_MOD}L)")
 
 
 def fingerprint_frame(df: DataFrame, text_col: str = "text",

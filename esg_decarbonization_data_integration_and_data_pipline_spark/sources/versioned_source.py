@@ -480,7 +480,7 @@ def _walk_commit_diffs(path: str, s: int, e: int, snapshot: bool,
     means "everything is new"; at a LAGGING checkpoint it means the
     emitted set is unknowable)."""
     from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
-        _data_files, _read_dvs, committed_versions,
+        _data_files, _read_dvs, _readable, committed_versions,
     )
 
     committed = [n for n in committed_versions(path) if s < n <= e]
@@ -488,15 +488,14 @@ def _walk_commit_diffs(path: str, s: int, e: int, snapshot: bool,
     prev_n: int | None = None
     prev_dvs: dict = {}
     for n in committed:
-        if not os.path.isdir(os.path.join(path, f"v_{n:08d}")):
+        if not _readable(path, n):
             raise ValueError(
                 f"{who} needs v_{n} of {path} but it was vacuumed "
                 f"-- retention must outlive the checkpoint lag "
                 f"(restart from a fresh checkpoint/startingVersion)")
         if prev is None:
             base = n - 1
-            if base >= 1 and os.path.isdir(
-                    os.path.join(path, f"v_{base:08d}")):
+            if base >= 1 and _readable(path, base):
                 prev = set(_data_files(path, base))
                 prev_n = base
                 prev_dvs = _read_dvs(path, base)
@@ -948,54 +947,29 @@ class _PushdownBatchReader(_BatchReader):
                     self._pushed.append((op, attr[0], val))
         return filters  # Spark re-applies all: pruning-only contract
 
-    def _bloom_excludes(self, f: str, idx_cache: dict,
-                        lanes_cache: dict) -> bool:
+    def _bloom_excludes(self, f: str, probes: dict) -> bool:
         """True when every equality probe value is provably absent
-        from the file (consolidated index first, else the per-file
-        sidecar; missing index = conservative keep).  ``lanes_cache``
-        memoizes the per-value md5 lanes across the whole file loop
-        -- O(values) digests, not O(files x values) (r12 review
-        finding; lookup_files hoists identically)."""
-        from esg_decarbonization_data_integration_and_data_pipline_spark.io.bloom_index import (
-            _consolidated, _lanes, _maybe_contains, _positions,
+        from the file (``sidecars.bloom_probe``: consolidated index
+        first, else the per-file sidecar; missing index =
+        conservative keep).  ``probes`` memoizes one probe per pushed
+        filter across the whole file loop -- O(values) digests, not
+        O(files x values)."""
+        from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
+            bloom_probe,
         )
 
-        for op, col, val in self._pushed:
+        for i, (op, col, val) in enumerate(self._pushed):
             if op not in ("eq", "in"):
                 continue
             values = [val] if op == "eq" else list(val)
             if not all(isinstance(v, (int, str))
                        and not isinstance(v, bool) for v in values):
                 continue
-            phys = self._pmap.get(col, col)
-            if phys not in idx_cache:
-                idx_cache[phys] = _consolidated(self.path, phys,
-                                                self.n)
-            idx = idx_cache[phys]
-            maybe = False
-            for v in values:
-                if idx is not None and f in idx:
-                    entry = idx[f]
-                    if entry is False:
-                        continue  # column absent: all-NULL there
-                    if entry is None:
-                        maybe = True  # unindexed at consolidation
-                        break
-                    m_bits, n_hashes, bits = entry
-                    if v not in lanes_cache:
-                        lanes_cache[v] = _lanes(v)
-                    h1, h2 = lanes_cache[v]
-                    if all(bits[p >> 3] & (1 << (p & 7))
-                           for p in _positions(h1, h2, n_hashes,
-                                               m_bits)):
-                        maybe = True
-                        break
-                elif _maybe_contains(
-                        os.path.join(os.path.abspath(self.path), f),
-                        phys, v):
-                    maybe = True
-                    break
-            if not maybe:
+            if i not in probes:
+                probes[i] = bloom_probe(self.path, self.n,
+                                        self._pmap.get(col, col),
+                                        values)
+            if not probes[i](f):
                 return True
         return False
 
@@ -1131,8 +1105,7 @@ class _PushdownBatchReader(_BatchReader):
                    (val, _prefix_next(val)) if op == "prefix"
                    else val)
                   for op, col, val in self._pushed]
-        idx_cache: dict = {}
-        lanes_cache: dict = {}
+        probes: dict = {}
         dv = _dv_payloads(self.path, self.n)
         parts = []
         for f in files:
@@ -1145,7 +1118,7 @@ class _PushdownBatchReader(_BatchReader):
                 continue
             if _null_exclude(rowmeta.get(f), pushed):
                 continue
-            if self._bloom_excludes(f, idx_cache, lanes_cache):
+            if self._bloom_excludes(f, probes):
                 continue
             parts.append(_FilteredFilePart(
                 os.path.join(root, f), self.schema_bytes,
@@ -1211,14 +1184,15 @@ class _CDFStreamReader(DataSourceStreamReader):
                                       options.get("startingversion"))
 
     def initialOffset(self) -> dict:
-        from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import committed_versions
+        from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
+            _readable, committed_versions,
+        )
 
         if self._start_opt is not None:
             # exclusive base: changes AFTER this version are emitted
             return {"version": int(self._start_opt)}
         readable = [n for n in committed_versions(self.path)
-                    if os.path.isdir(os.path.join(self.path,
-                                                  f"v_{n:08d}"))]
+                    if _readable(self.path, n)]
         # first micro-batch = the whole readable table as an initial
         # snapshot (Delta's default), i.e. start BEFORE the first
         # readable version.  The snapshot marker tells partitions()

@@ -24,7 +24,6 @@ import pytest
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.bloom_index import (
     build_bloom_index,
     lookup_files,
-    sidecar_candidates,
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.constraints import (
     set_table_constraints,
@@ -32,6 +31,9 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.io.constraints 
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.purge import (
     _rewrite_file,
+)
+from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
+    sidecar_candidates,
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
     _data_files,

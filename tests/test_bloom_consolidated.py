@@ -10,15 +10,17 @@ import os
 import pytest
 
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.bloom_index import (
-    _consolidated,
     build_bloom_index,
     consolidate_bloom_index,
-    consolidated_candidates,
     lookup_files,
     point_lookup,
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.purge import (
     purge_keys_history,
+)
+from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
+    _consolidated,
+    consolidated_candidates,
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
     append_version,
@@ -145,7 +147,7 @@ def test_consolidate_refuses_shallow_clone(spark, tmp_path):
 def test_idx_cache_evicts_dead_and_stale_versions(spark, tmp_path):
     """stat-miss evicts a deleted index's bitmaps; inserting a new
     version's index drops the same (table, col)'s older versions."""
-    from esg_decarbonization_data_integration_and_data_pipline_spark.io.bloom_index import (
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
         _IDX_CACHE, _consolidated_path,
     )
 

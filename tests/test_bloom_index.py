@@ -15,10 +15,12 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.io.bloom_index 
     build_bloom_index,
     lookup_files,
     point_lookup,
-    sidecar_candidates,
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.purge import (
     purge_keys_history,
+)
+from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
+    sidecar_candidates,
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
     append_version,
@@ -187,3 +189,38 @@ def test_sidecar_cleanup_survives_glob_metacharacters(spark, tmp_path):
         len(sidecar_candidates(os.path.join(root, f)))
         for f in _data_files(t, current_version(t)))
     assert leftover == 0
+
+
+def test_hash_kernel_matches_scalar_reference():
+    """The numpy md5 lanes and the double-hash positions -- over
+    uint64 arrays (builds) and Python ints (probes) alike -- equal the
+    scalar recipe the sidecars on disk were built with (uint64
+    wraparound included), across signs, widths, strings and
+    bit-array sizes."""
+    import hashlib
+
+    import numpy as np
+
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
+        bloom_positions,
+        md5_lanes,
+    )
+
+    def lanes(v):
+        h = hashlib.md5(str(v).encode("utf-8")).digest()
+        return (int.from_bytes(h[:8], "little"),
+                int.from_bytes(h[8:16], "little"))
+
+    def positions(h1, h2, k, m):
+        h2 |= 1
+        return [((h1 + i * h2) % (1 << 64)) % m for i in range(k)]
+
+    vals = [0, 1, -5, 2**63 - 1, -(2**63), "", "abc", "ünï", 10**12]
+    h1, h2 = md5_lanes(vals)
+    for i, v in enumerate(vals):
+        assert (int(h1[i]), int(h2[i])) == lanes(v)
+        for m in (64, 977, 1 << 20, (1 << 62) + 1):
+            want = positions(*lanes(v), 7, m)
+            got = bloom_positions(h1[i:i + 1], h2[i:i + 1], 7, m)
+            assert np.concatenate(got).tolist() == want
+            assert bloom_positions(*lanes(v), 7, m) == want

@@ -356,3 +356,28 @@ def test_purge_rebound_logical_key_raises(spark, tmp_path):
     purge_keys_history(spark, t, "a", [7], key_version=3)
     assert_keys_absent(spark, t, "b", [2])
     assert_keys_absent(spark, t, "a", [7], key_version=3)
+
+
+def test_count_keys_skips_schemaless_version_without_key(spark,
+                                                         tmp_path):
+    """A legacy version with no pinned schema whose files lack the
+    key column is all-NULL there: the erasure audit counts it as 0
+    instead of failing the whole audit on the missing column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
+        adopt_legacy_history,
+    )
+
+    td = str(tmp_path / "t")
+    for n, cols in ((1, {"x": [1.0, 2.0]}),
+                    (2, {"k": [5, 6, 5], "x": [1.0, 2.0, 3.0]})):
+        vdir = os.path.join(td, f"v_{n:08d}")
+        os.makedirs(vdir)
+        pq.write_table(pa.table(cols),
+                       os.path.join(vdir, "part-00000.parquet"))
+    with open(os.path.join(td, "_CURRENT"), "w") as fh:
+        fh.write("v_00000002\n")
+    assert adopt_legacy_history(td) == [1]
+    assert count_keys_all_versions(spark, td, "k", [5]) == {1: 0, 2: 2}

@@ -15,11 +15,13 @@ import pytest
 
 from esg_decarbonization_data_integration_and_data_pipline_spark.plans.queries import REGISTRY
 
+# the sidecar and metadata-answer queries: their oracle replay also
+# runs in the default tier, so a change to the sidecar module or the
+# datasource pushdown fails the everyday run, not only `-m slow`
+SMOKE = ("bloom_point_lookup_orders", "ndv_metadata_audit",
+         "histogram_quantile_audit", "dedup_bloom_incremental",
+         "datasource_pushdown_audit")
 
-
-# long-tail suite: skipped by the default run (pytest.ini addopts -m "not slow");
-# select with `-m slow`
-pytestmark = pytest.mark.slow
 
 def _canon_cell(v) -> str:
     if v is None:
@@ -42,8 +44,7 @@ def canon_rows(df: pd.DataFrame) -> list[tuple]:
     return rows
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_query_matches_oracle(name, spark, sf_dir, duck):
+def _matches_oracle(name, spark, sf_dir, duck):
     spec = REGISTRY[name]
     sdf = spec.fn(spark, sf_dir).toPandas()
     if spec.oracle is None:
@@ -53,3 +54,16 @@ def test_query_matches_oracle(name, spark, sf_dir, duck):
     assert sorted(sdf.columns) == sorted(ddf.columns)
     assert len(sdf) == len(ddf)
     assert canon_rows(sdf) == canon_rows(ddf)
+
+
+# long-tail suite: skipped by the default run (pytest.ini addopts
+# -m "not slow"); select with `-m slow`
+@pytest.mark.slow
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_query_matches_oracle(name, spark, sf_dir, duck):
+    _matches_oracle(name, spark, sf_dir, duck)
+
+
+@pytest.mark.parametrize("name", SMOKE)
+def test_sidecar_query_matches_oracle(name, spark, sf_dir, duck):
+    _matches_oracle(name, spark, sf_dir, duck)

@@ -1,19 +1,16 @@
 """Regression tests for review findings: dependency-failure skips,
-same-name as-of columns, salted outer-join rejection, long-token
-hashes, payload key order."""
+same-name as-of columns, long-token hashes, payload key order."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
 from esg_decarbonization_data_integration_and_data_pipline_spark.operators.dedup import (
     minhash_signature_udf,
 )
 from esg_decarbonization_data_integration_and_data_pipline_spark.operators.joins import asof_join
-from esg_decarbonization_data_integration_and_data_pipline_spark.operators.skew import salted_join
 from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.run_all import JobRegistry
 from esg_decarbonization_data_integration_and_data_pipline_spark.sources.connectors import rest_source
 
@@ -49,12 +46,6 @@ def test_asof_join_same_time_column_name(spark):
     assert out.t == 10          # left's column keeps its name
     assert out.t_right == 7     # right's collides -> _right suffix
     assert out.tag == "hit"
-
-
-def test_salted_join_rejects_outer(spark):
-    df = spark.createDataFrame([("a", 1)], "k string, v int")
-    with pytest.raises(ValueError, match="salted_join supports"):
-        salted_join(df, df, ["k"], how="full_outer")
 
 
 def test_minhash_handles_long_tokens(spark):

@@ -1,13 +1,12 @@
 """Regression tests for the second review pass: null text through the
 Arrow kernels, registration-order-independent dependency skips,
-per-site base comparison, duplicate-row salting."""
+per-site base comparison."""
 
 from __future__ import annotations
 
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from esg_decarbonization_data_integration_and_data_pipline_spark.operators.dedup import (
     minhash_signature_udf, simhash32,
@@ -15,7 +14,6 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.operators.dedup
 from esg_decarbonization_data_integration_and_data_pipline_spark.operators.text import (
     fingerprint_frame,
 )
-from esg_decarbonization_data_integration_and_data_pipline_spark.operators.skew import salted_join
 from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.elect_target import (
     renew_targets,
 )
@@ -73,14 +71,3 @@ def test_pct_vs_base_is_per_site(spark):
     # each site's base-year pct must be exactly 0 regardless of others
     assert out[("A", 2024)].pct_vs_base == 0.0
     assert out[("B", 2024)].pct_vs_base == 0.0
-
-
-def test_salted_join_spreads_duplicate_rows(spark):
-    left = spark.createDataFrame([("hot", 1.0)] * 64, "k string, v double")
-    right = spark.createDataFrame([("hot", "H")], "k string, tag string")
-    out = salted_join(left, right, ["k"], n_salts=8)
-    assert out.count() == 64  # parity with plain join
-    salts = (left.withColumn("__salt",
-                             F.floor(F.rand(seed=42) * 8).cast("int"))
-                 .select("__salt").distinct().count())
-    assert salts > 1  # identical rows no longer collapse to one salt

@@ -1,9 +1,6 @@
-"""read_versions (r16): the multi-version reader must be
-row-identical to the per-version read_version union on BOTH sides of
-its cost gate -- the by-file-deduped path (forced via
-SPARK_GRAFT_READ_DEDUP_MIN_BYTES=0) scans each DV-free physical file
-exactly once; the small-input path keeps the r15 per-(version, file)
-union."""
+"""read_versions: the multi-version reader must be row-identical to
+the per-version read_version union, refuse schema-changing groups and
+validate its version list."""
 
 from __future__ import annotations
 
@@ -16,15 +13,6 @@ from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned im
     delete_keys_version, drop_columns, read_version, read_versions,
 )
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(params=["dedup", "union"])
-def gate(request, monkeypatch):
-    """Run each equivalence test on both sides of the cost gate."""
-    monkeypatch.setenv(
-        "SPARK_GRAFT_READ_DEDUP_MIN_BYTES",
-        "0" if request.param == "dedup" else str(1 << 60))
-    return request.param
 
 
 def _union_reference(spark, td, versions):
@@ -55,7 +43,7 @@ def appended(spark, tmp_path):
     return td
 
 
-def test_matches_union_on_append_chain(spark, appended, gate):
+def test_matches_union_on_append_chain(spark, appended):
     got = read_versions(spark, appended, (1, 2))
     ref = _union_reference(spark, appended, (1, 2))
     assert got.columns == ref.columns
@@ -64,51 +52,7 @@ def test_matches_union_on_append_chain(spark, appended, gate):
     assert _rows(got) == _rows(ref)
 
 
-def _scan_file_counts(df):
-    """How many scan nodes list each physical file."""
-    from collections import Counter
-
-    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
-    cnt: Counter = Counter()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if not hasattr(leaf, "relation"):
-            continue
-        files = leaf.relation().location().inputFiles()
-        for j in range(len(files)):
-            cnt[files[j]] += 1
-    return cnt
-
-
-def test_dedup_path_scans_each_shared_file_once(spark, appended,
-                                                monkeypatch):
-    """Above the gate, every physical file must be LISTED by exactly
-    one scan node (files group by version-membership signature --
-    {v1,v2} for v1's files, {v2} for v2's); the per-version union
-    lists v1's files twice."""
-    monkeypatch.setenv("SPARK_GRAFT_READ_DEDUP_MIN_BYTES", "0")
-    got_cnt = _scan_file_counts(read_versions(spark, appended,
-                                              (1, 2)))
-    assert got_cnt and all(c == 1 for c in got_cnt.values()), got_cnt
-    ref_cnt = _scan_file_counts(
-        _union_reference(spark, appended, (1, 2)))
-    assert max(ref_cnt.values()) == 2, ref_cnt
-    assert set(ref_cnt) == set(got_cnt)
-
-
-def test_small_input_gate_keeps_the_union_shape(spark, appended,
-                                                monkeypatch):
-    """Below the gate (this fixture is a few KB), the read must keep
-    the r15 one-scan-per-(version, file) union -- re-reading
-    page-cached bytes floors faster than the explode attribution
-    (interleaved A/B, r16)."""
-    monkeypatch.delenv("SPARK_GRAFT_READ_DEDUP_MIN_BYTES",
-                       raising=False)
-    cnt = _scan_file_counts(read_versions(spark, appended, (1, 2)))
-    assert max(cnt.values()) == 2, cnt
-
-
-def test_matches_union_with_cow_delete_and_dv(spark, appended, gate):
+def test_matches_union_with_cow_delete_and_dv(spark, appended):
     td = appended
     # v3: copy-on-write delete rewrites touched files
     delete_keys_version(
@@ -126,7 +70,7 @@ def test_matches_union_with_cow_delete_and_dv(spark, appended, gate):
     assert _rows(got) == _rows(ref)
 
 
-def test_schema_change_raises(spark, appended, gate):
+def test_schema_change_raises(spark, appended):
     td = appended
     drop_columns(spark, td, ["s"])
     with pytest.raises(SchemaMismatchError):

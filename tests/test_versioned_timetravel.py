@@ -260,3 +260,107 @@ def test_vacuum_dry_run_reports_without_removing(spark, tmp_path):
     for n in got:
         assert not os.path.isdir(os.path.join(t, f"v_{n:08d}"))
     assert read_current(spark, t).count() == 4
+
+
+def test_vacuum_retires_a_data_holder_version(spark, tmp_path):
+    """A version outside vacuum's keep set whose dir must survive
+    (a newer kept version references its data files) reads as
+    vacuumed -- its own manifest still lists files of dirs vacuum
+    reaped -- and fsck stays clean."""
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.fsck import (
+        verify_table,
+    )
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
+        compact_table, delete_keys_dv, merge_version,
+    )
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).selectExpr("id AS k", "id % 7 AS v")
+
+    t = str(tmp_path / "t")
+    append_version(rows(0, 20000), t, stats_columns=["k"])     # v1
+    compact_table(spark, t, target_file_bytes=1 << 18,
+                  stats_columns=["k"])                         # v2
+    append_version(rows(20000, 21000), t,
+                   stats_columns=["k"])                        # v3
+    # rewrites only v2's file; v3's files carry over by reference
+    merge_version(spark, t, rows(0, 2000).selectExpr(
+        "k", "CAST(-1 AS BIGINT) AS v"), "k")                  # v4
+    delete_keys_dv(spark, t, rows(20000, 20010).select("k"),
+                   "k")                                        # v5
+    compact_table(spark, t)                                    # v6
+    current = sorted(map(tuple, read_current(spark, t).collect()))
+    assert vacuum(t, keep_last=2) == [1, 2]
+    # v5 references v3's appended files, so v3's dir stays -- but v3
+    # lists v2's reaped file, and as a version it is gone
+    assert os.path.isdir(os.path.join(t, "v_00000003"))
+    for n in (1, 2, 3, 4):
+        with pytest.raises(FileNotFoundError, match="vacuumed"):
+            read_version(spark, t, n)
+    assert [h["version"] for h in history(t)] == [5, 6]
+    assert verify_table(spark, t)["ok"]
+    assert read_version(spark, t, 5).count() == 20990
+    assert sorted(map(tuple, read_current(spark, t).collect())) == \
+        current
+
+
+def test_vacuum_drops_files_only_a_retired_version_references(
+        spark, tmp_path):
+    """A retired data-holder dir keeps only the files a retained
+    version references: a file only the retired version read (here
+    the pre-merge copy of a rewritten file) goes with its sidecars,
+    so a later purge leaves no copy of the erased key under the
+    table, and fsck sees no unreferenced file."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.bloom_index import (
+        build_bloom_index,
+    )
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.fsck import (
+        verify_table,
+    )
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.purge import (
+        purge_keys_history,
+    )
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
+        sidecar_candidates,
+    )
+    from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
+        _data_files, merge_version,
+    )
+
+    t = str(tmp_path / "t")
+    append_version(spark.range(0, 100, numPartitions=2)
+                   .selectExpr("id AS k", "id % 7 AS v"), t,
+                   stats_columns=["k"])                        # v1
+    files = [os.path.join(t, f) for f in _data_files(t, 1)]
+    assert len(files) == 2
+    build_bloom_index(spark, t, "k")
+    rewritten, = [f for f in files
+                  if 3 in pq.read_table(f).column("k").to_pylist()]
+    kept, = [f for f in files if f != rewritten]
+    # the k stats prune the merge to the file holding k=3
+    merge_version(spark, t, spark.createDataFrame(
+        [(3, -1)], "k bigint, v bigint"), "k")                # v2
+    append_version(spark.range(100, 110)
+                   .selectExpr("id AS k", "id % 7 AS v"), t,
+                   stats_columns=["k"])                        # v3
+    assert vacuum(t, keep_last=2) == []
+    # v3 still reads v1's other file, so v1's dir stays -- but the
+    # pre-merge file only v1 read is gone, sidecars included
+    with pytest.raises(FileNotFoundError, match="vacuumed"):
+        read_version(spark, t, 1)
+    assert not os.path.exists(rewritten)
+    assert sidecar_candidates(rewritten) == []
+    assert os.path.exists(kept) and sidecar_candidates(kept)
+    report = verify_table(spark, t)
+    assert report["ok"] and report["unreferenced_files"] == []
+    purge_keys_history(spark, t, "k", [3])
+    parts = glob.glob(os.path.join(t, "**", "*.parquet"),
+                      recursive=True)
+    assert parts
+    assert not any(3 in pq.read_table(p).column("k").to_pylist()
+                   for p in parts)
+    assert read_current(spark, t).count() == 109

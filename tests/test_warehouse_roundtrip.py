@@ -1,7 +1,6 @@
 """End-to-end warehouse integration: raw fixtures -> staging via the
 bill-split job with replace_range writes -> idempotency under rerun
-(the reference's core DELETE-then-append guarantee, S7), plus the
-salting operator."""
+(the reference's core DELETE-then-append guarantee, S7)."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import os
 from pyspark.sql import functions as F
 
 from esg_decarbonization_data_integration_and_data_pipline_spark.io import writers as W
-from esg_decarbonization_data_integration_and_data_pipline_spark.operators.skew import salted_join
 from esg_decarbonization_data_integration_and_data_pipline_spark.pipelines.electric_bill_split import (
     split_bill_tables,
 )
@@ -53,15 +51,3 @@ def test_warehouse_rerun_is_idempotent(spark, tmp_path):
     second = sorted(map(tuple, W.read_table(spark, path)
                         .drop("period_month").collect()))
     assert first == second and len(first) == 2
-
-
-def test_salted_join_matches_plain_join(spark):
-    left = spark.createDataFrame(
-        [("hot", i * 1.0) for i in range(50)] + [("cold", -1.0)],
-        "k string, v double")
-    right = spark.createDataFrame(
-        [("hot", "H"), ("cold", "C"), ("absent", "X")], "k string, tag string")
-    plain = sorted(map(tuple, left.join(right, ["k"], "inner").collect()))
-    salted = sorted(map(tuple, salted_join(left, right, ["k"],
-                                           n_salts=4).collect()))
-    assert salted == plain

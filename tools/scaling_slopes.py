@@ -588,7 +588,10 @@ def main() -> None:
 
     def _bloom_build_cycle(s):
         from esg_decarbonization_data_integration_and_data_pipline_spark.io.bloom_index import (
-            build_bloom_index, sidecar_candidates,
+            build_bloom_index,
+        )
+        from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
+            sidecar_candidates,
         )
         from esg_decarbonization_data_integration_and_data_pipline_spark.io.versioned import (
             _data_files, current_version,
@@ -1012,6 +1015,8 @@ def main() -> None:
         # maintenance, not per-probe cost (bloom_build measures it)
         from esg_decarbonization_data_integration_and_data_pipline_spark.io.bloom_index import (
             build_bloom_index, consolidate_bloom_index,
+        )
+        from esg_decarbonization_data_integration_and_data_pipline_spark.io.sidecars import (
             consolidated_candidates,
         )
 
